@@ -533,14 +533,22 @@ def main() -> None:
     # written ATOMICALLY (tmp + rename) so a reader that samples the
     # file mid-write — the driver's per-query comparator reads this
     # file because the stdout tail is truncation-prone (VERDICT r11
-    # next-#2) — never sees a half-written JSON document. Keys are
-    # unchanged from r8 ("queries" holds the per-query seconds map).
+    # next-#2) — never sees a half-written JSON document. The tmp name
+    # carries the pid so two concurrent bench runs never share one.
+    # Keys are additions-only ("queries" holds the per-query seconds
+    # map; "cpus" is the session's core count, stamped in this file
+    # only so the stdout lines stay unchanged).
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
-    tmp_path = detail_path + ".tmp"
+    tmp_path = f"{detail_path}.{os.getpid()}.tmp"
+    detail = {
+        **summary,
+        "queries": timings,
+        "cpus": spark.sparkContext.defaultParallelism,
+    }
     with open(tmp_path, "w") as fh:
-        json.dump({**summary, "queries": timings}, fh, indent=1, sort_keys=True)
+        json.dump(detail, fh, indent=1, sort_keys=True)
         fh.write("\n")
     os.replace(tmp_path, detail_path)
     print(json.dumps({**summary, "queries": timings}))

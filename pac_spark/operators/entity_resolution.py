@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from pac_spark import catalog
+from pac_spark import catalog, session
 from pac_spark.cache import checkpoint, pin
 from pac_spark.functions.exact import exact_avg
 from pac_spark.functions.fuzzy import (
@@ -434,47 +434,50 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
     checksum = _checksum(labels)
 
-    # Loop parallelism follows the MEASURED endpoint count (cheap
-    # count on the already-checkpointed round-0 frame), same move as
-    # operators.graph.pagerank: every frame in the propagation loop is
-    # endpoint-sized, so a corpus-tuned shuffle partition count pays
-    # pure task-scheduling overhead per round. ~250k endpoints/task,
-    # floor 4, capped at the session default; results are partition-
-    # count-invariant (min-label algebra, checksum-converged).
+    # every frame in the propagation loop is endpoint-sized (one row
+    # per edge endpoint, constant across rounds); below the gate the
+    # label frame broadcasts into the per-round edge join and the
+    # doubling self-join, so the checkpointed edge frame — whose hash
+    # partitioning does NOT survive localCheckpoint — is probed in
+    # place instead of re-exchanged and sorted every round
     spark = edges.sparkSession
-    from pac_spark.operators.graph import (
-        _broadcast_threshold,
-        _RANK_ROW_BYTES,
-        _session_shuffle_parts,
-    )
-
     n_endpoints = labels.count()
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(session_parts, max(4, -(-n_endpoints // 250_000)))
-        spark.conf.set(parts_key, str(loop_parts))
-    # r12 (guide §2.4/§3.1 — the LPA/SSSP loop discipline ported, the
-    # r11 verdict's top item): the label frame is endpoint-sized and
-    # constant-cardinality across rounds (one row per edge endpoint),
-    # so below the session's own broadcast threshold it broadcasts
-    # into the per-round edge join — the checkpointed edge frame,
-    # whose hash partitioning does NOT survive localCheckpoint (Scan
-    # ExistingRDD reports UnknownPartitioning), is then probed in
-    # place instead of being re-exchanged+sorted every propagation
-    # round. Past the gate the plan falls back to the shuffle joins
-    # that scale to billion-edge dup graphs. Min-label propagation is
-    # join-strategy- and partition-count-invariant (min over the same
-    # multiset, checksum-converged), so results are identical on both
-    # paths.
-    bcast_labels = n_endpoints * _RANK_ROW_BYTES <= _broadcast_threshold(spark)
-    try:
-        converged, labels, checksum = _propagate(
-            und, labels, checksum, _checksum, bcast_labels
-        )
-    finally:
-        spark.conf.set(parts_key, prev_parts)
+    parts = session.loop_partitions(spark, -(-n_endpoints // 250_000))
+    bcast_labels = session.fits_broadcast(spark, n_endpoints)
+    converged = False
+    with session.scoped_conf(spark, session.SHUFFLE_PARTITIONS, parts):
+        for rnd in range(24):  # doubling: covers diameter ~2^22 chains
+            label_side = F.broadcast(labels) if bcast_labels else labels
+            stepped = (
+                und.join(label_side, und.src == labels.id)
+                .groupBy("dst")
+                .agg(F.min("label").alias("label"))
+                .select(F.col("dst").alias("id"), "label")
+            )
+            if rnd >= 2:
+                # pointer doubling — adaptive like the ngram skew
+                # guard: pay the extra self-join only when the graph is
+                # provably not a near-clique (it didn't converge in 2
+                # plain rounds). Every label value is itself an
+                # endpoint id (labels start as ids and propagate), so
+                # the left join always hits.
+                x, y = stepped.alias("x"), stepped.alias("y")
+                y_side = F.broadcast(y) if bcast_labels else y
+                stepped = x.join(
+                    y_side, F.col("x.label") == F.col("y.id"), "left"
+                ).select(
+                    F.col("x.id").alias("id"),
+                    F.least(
+                        F.col("x.label"),
+                        F.coalesce(F.col("y.label"), F.col("x.label")),
+                    ).alias("label"),
+                )
+            labels = checkpoint(stepped)
+            stepped_sum = _checksum(labels)
+            if stepped_sum == checksum:
+                converged = True
+                break
+            checksum = stepped_sum
     if not converged:
         raise RuntimeError(
             "connected_components did not converge within the round cap"
@@ -485,48 +488,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         "id", F.col("id").alias("label")
     )
     return labels.union(isolated)
-
-
-def _propagate(und, labels, checksum, _checksum, bcast_labels=False):
-    """The min-label propagation rounds of :func:`connected_components`
-    (split out so the partition-scoped setting wraps exactly the loop).
-    ``bcast_labels`` (gated by the caller on estimated bytes vs the
-    session's own broadcast threshold) broadcasts the endpoint-sized
-    label frame into the edge join and the doubling self-join.
-    Returns (converged, labels, checksum)."""
-    converged = False
-    for rnd in range(24):  # doubling: covers diameter ~2^22 chains
-        label_side = F.broadcast(labels) if bcast_labels else labels
-        stepped = (
-            und.join(label_side, und.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("dst").alias("id"), "label")
-        )
-        if rnd >= 2:
-            # pointer doubling — adaptive like the ngram skew guard:
-            # pay the extra self-join only when the graph is provably
-            # not a near-clique (it didn't converge in 2 plain rounds).
-            # Every label value is itself an endpoint id (labels start
-            # as ids and propagate), so the left join always hits.
-            x, y = stepped.alias("x"), stepped.alias("y")
-            y_side = F.broadcast(y) if bcast_labels else y
-            stepped = x.join(
-                y_side, F.col("x.label") == F.col("y.id"), "left"
-            ).select(
-                F.col("x.id").alias("id"),
-                F.least(
-                    F.col("x.label"),
-                    F.coalesce(F.col("y.label"), F.col("x.label")),
-                ).alias("label"),
-            )
-        labels = checkpoint(stepped)
-        stepped_sum = _checksum(labels)
-        if stepped_sum == checksum:
-            converged = True
-            break
-        checksum = stepped_sum
-    return converged, labels, checksum
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:

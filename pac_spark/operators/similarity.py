@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from pac_spark import catalog
+from pac_spark import catalog, session
 from pac_spark.cache import checkpoint, pin
 
 __all__ = [
@@ -534,30 +534,12 @@ def _ivf_centroids(
         .select((F.col("rn") - 1).cast("int").alias("centroid_id"), F.col("v").alias("c"))
     )
     wa = W.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("centroid_id"))
-    # loop-scoped shuffle parallelism (r11, guide §2.2/§1.2): every
-    # frame the loop shuffles is bounded by the FIT SAMPLE
-    # (≤ IVF_FIT_TARGET rows by construction, regardless of corpus
-    # size), so the session's corpus-sized shuffle-partition count is
-    # pure task-scheduling overhead per round — the same measured
-    # argument as the pagerank/LPA loops, except here the bound is a
-    # constant of the operator, so the derived count is too. Results
-    # are partition-count invariant (exact BIGINT sums; argmin window
-    # is per-vec_id with a total order). Measured neutral for
-    # ann_ivf_topk at sf0.1/local[32] (same-JVM A/B 3.99 s -> 3.99 s —
-    # this loop is not the query's cost there) and kept anyway: on a
-    # cluster session with thousands of shuffle partitions the
-    # 800-row fit sample would otherwise schedule thousands of empty
-    # tasks per round.
+    # every frame the loop shuffles is bounded by the FIT SAMPLE
+    # (<= IVF_FIT_TARGET rows by construction, regardless of corpus
+    # size), so the loop partition count is a constant of the operator
     spark = sample.sparkSession
-    from pac_spark.operators.graph import _session_shuffle_parts
-
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(session_parts, max(4, -(-IVF_FIT_TARGET // 250_000)))
-        spark.conf.set(parts_key, str(loop_parts))
-    try:
+    parts = session.loop_partitions(spark, -(-IVF_FIT_TARGET // 250_000))
+    with session.scoped_conf(spark, session.SHUFFLE_PARTITIONS, parts):
         for _ in range(iters):
             assigned = (
                 sample.crossJoin(F.broadcast(cents))
@@ -602,8 +584,6 @@ def _ivf_centroids(
                     "left",
                 ).select("centroid_id", F.coalesce("c_new", "c").alias("c"))
             )
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return cents
 
 
@@ -622,9 +602,7 @@ def _pq_codebooks(sample: DataFrame) -> DataFrame:
     argmin window, update the same exact-BIGINT componentwise mean —
     so every codebook is value-identical (oracle-verified; the DuckDB
     oracle still unrolls per-m loops), while the round count drops
-    M-fold: PQ_ITERS checkpoints instead of PQ_M×PQ_ITERS. Same-JVM
-    interleaved A/B at sf0.1 (min-of-4, warm, whole pq_topk):
-    7.68 s -> 3.88 s.
+    M-fold: PQ_ITERS checkpoints instead of PQ_M×PQ_ITERS.
     """
     subs = sample.select(
         "vec_id",
@@ -653,15 +631,8 @@ def _pq_codebooks(sample: DataFrame) -> DataFrame:
     )
     wa = W.partitionBy("sub", "vec_id").orderBy(F.asc("dist"), F.asc("centroid_id"))
     spark = sample.sparkSession
-    from pac_spark.operators.graph import _session_shuffle_parts
-
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(session_parts, max(4, -(-IVF_FIT_TARGET // 250_000)))
-        spark.conf.set(parts_key, str(loop_parts))
-    try:
+    parts = session.loop_partitions(spark, -(-IVF_FIT_TARGET // 250_000))
+    with session.scoped_conf(spark, session.SHUFFLE_PARTITIONS, parts):
         for _ in range(PQ_ITERS):
             assigned = (
                 subs.join(F.broadcast(cents), "sub")
@@ -698,8 +669,6 @@ def _pq_codebooks(sample: DataFrame) -> DataFrame:
                     "left",
                 ).select("sub", "centroid_id", F.coalesce("c_new", "c").alias("c"))
             )
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return cents
 
 

@@ -75,20 +75,6 @@ def all_specs() -> list[QuerySpec]:
     # while every queued operator stays under the identical local
     # value-hash gate.
     hoist = [
-    "halflife_decayed_user_value",
-    "lpa_communities",
-    "phrase_match_docs",
-    "prefix_filter_neardup_pairs",
-    "priority_sample_docs",
-    "source_budget_waterfill",
-    "streaming_growth_accounting",
-    "streaming_halflife_user_value",
-    "streaming_purchase_click_left_join",
-    "streaming_twa_user_value",
-    "user_daily_features",
-    "user_growth_accounting",
-    "vocab_frequency_octaves",
-    "weighted_percentiles_price_by_flag",
     "dedup_canonical_docs",
     "er_approved",
     "er_clusters",
@@ -97,34 +83,48 @@ def all_specs() -> list[QuerySpec]:
     "levenshtein_neardup_pairs",
     "semantic_dedup",
     "sssp_from_hub",
-    "streaming_sessions_10m",
-    "streaming_tumbling_1h",
-    "ann_lsh_topk",
-    "corpus_quality_by_lang",
-    "doc_chunks",
-    "doc_fingerprints",
-    "knn_bruteforce",
-    "multimodal_byte_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "stratified_sample",
-    "streaming_enriched_by_segment",
-    "text_stats",
-    "doc_top_terms",
-    "knn_rerank",
-    "label_centroids",
-    "pii_scrub_docs",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_discounted_revenue",
-    "q20_heavy_promo_suppliers",
-    "q2_top_balance_supplier",
-    "q4_late_shipments",
-    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_profit",
+    "salted_events_join",
+    "streaming_sliding_1h_30m",
+    "vocab_top_terms",
+    "basket_part_pairs",
+    "cohort_retention",
+    "cube_flag_status",
+    "distinct_counts_by_segment",
+    "event_transition_matrix",
+    "events_sessions_10m",
+    "events_sliding_1h_30m",
+    "events_tumbling_1h",
+    "json_events_extract",
+    "key_skew_report",
+    "profile_orders",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier",
+    "referential_integrity_report",
+    "rolling_1h_user_stats",
+    "rollup_region_nation",
+    "top_customers_by_revenue",
+    "window_rank_orders",
+    "window_running_events",
+    "approx_distinct_parts",
+    "asof_join_purchase_click",
+    "bloom_pruned_orders_join",
+    "butterfly_supplier_pairs",
+    "company_issue_summary",
+    "corpus_curation",
+    "corr_quality_tokens_by_lang",
+    "dedup_exact_docs",
+    "doc_repetition_signals",
+    "export_envelope",
+    "flagship_company_positions",
+    "grouping_sets_revenue",
+    "interval_overlap_join",
+    "issues_count_validation",
+    "ivm_nation_balance",
+    "mad_outliers_by_flag",
+    "ngram_jaccard_pairs",
     ]
     by_name = {s.name: s for s in specs}
     # validate BEFORE indexing so a renamed/removed spec surfaces as

@@ -163,10 +163,10 @@ FORCE_HOIST: tuple[str, ...] = (
     # identical (test_r12_optimizations + oracle drive) -> forced.
     "levenshtein_neardup_pairs",
     # r12 substrate, NOT forced per the classification policy above:
-    # the defensive _session_shuffle_parts parse in the graph/CC/IVF
-    # loops and stream_shuffle_parts (ADVICE r11 #1/#5) is an
-    # execution-knob guard with no logical-plan change on integer-conf
-    # runtimes; the atomic BENCH_DETAIL write is bench-file-only.
+    # the shuffle-partition guard in the graph/CC/IVF loops and
+    # stream_shuffle_parts is an execution-knob guard with no
+    # logical-plan change; the atomic BENCH_DETAIL write is
+    # bench-file-only.
 )
 
 # r9 VERIFIED DRAINED (VERDICT r8 next-#6): the ER-LSH janino 64 KB
@@ -216,7 +216,7 @@ FORCE_HOIST: tuple[str, ...] = (
 # empty the queue.
 #
 # R11 FORCE_HOIST STARTER LIST: EMPTY as of r10 end — every spec whose
-# plan changed in r10 (pagerank via the _broadcast_threshold fallback,
+# plan changed in r10 (pagerank via the broadcast-threshold fallback,
 # the 5-spec ER family via the measured candidate_pairs pin removal)
 # is in the r10 cap, so its newest driver evidence post-dates the
 # change. (A frontier-pruned sssp_from_hub was measured 1.12x SLOWER
@@ -245,7 +245,7 @@ FORCE_HOIST: tuple[str, ...] = (
 # 3-SF-oracle-green from birth, all 16 batch ops NULL-lace clean, all
 # plan-shape pinned (tests/test_plans.py::test_r11_new_ops_scale_legal).
 # FORCE stayed EMPTY all round: the only registered-code change was
-# the _broadcast_threshold warn-once (log-only, pagerank/lpa/sssp
+# the broadcast-threshold warn-once (log-only, pagerank/lpa/sssp
 # re-driven green through drive_contract anyway); the
 # attribution_position_weighted plan churn (trim, then the measured
 # UNPIN at two scale points) and the trade_graph_components oracle

@@ -16,10 +16,22 @@ planned by Catalyst and executed by executors:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_runtime", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = [
+    "get_spark",
+    "tune_runtime",
+    "DEFAULT_SHUFFLE_PARTITIONS",
+    "SHUFFLE_PARTITIONS",
+    "scoped_conf",
+    "loop_partitions",
+    "fits_broadcast",
+]
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 def _cpus() -> int:
     """SPARK_GRAFT_CPUS, parsed defensively: a non-numeric or empty
@@ -113,3 +125,53 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# The loop scope: iterative operators (graph loops, connected
+# components, Lloyd fits) and stream drains run their rounds inside
+# ``scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(...))`` and
+# gate explicit broadcasts with ``fits_broadcast``. Results never depend
+# on either choice: every loop is integer/min/argmax arithmetic that is
+# partition-count- and join-strategy-invariant.
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
+    """Set ``key`` to ``str(value)`` for the ``with`` body and restore the
+    previous value on exit, including on an exception. ``value=None``
+    leaves the conf alone. A key with no explicit value before is UNSET
+    on exit: writing back the registered default would pin it for every
+    later query on the session."""
+    if value is None:
+        yield
+        return
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def loop_partitions(spark: SparkSession, want: int) -> int:
+    """Shuffle partitions for a loop whose per-round frames the caller
+    has measured: ``want`` (the caller's ceil-divided size, e.g. ~250k
+    nodes or ~1M edge rows per task), floored at 4 for a parallel head
+    and capped at the session setting so big inputs keep full
+    parallelism. A corpus-tuned session count would otherwise pay pure
+    task-scheduling overhead on every small round."""
+    return min(int(spark.conf.get(SHUFFLE_PARTITIONS)), max(4, want))
+
+
+def fits_broadcast(spark: SparkSession, rows: int) -> bool:
+    """Whether ``rows`` loop rows may take an explicit ``broadcast()``
+    hint. The hint bypasses ``spark.sql.autoBroadcastJoinThreshold``, so
+    the gate re-applies it: ~48 bytes per row (two longs plus UnsafeRow
+    and hash-table overhead) against the threshold as Spark itself
+    parsed it (-1 disables broadcasting). Past the gate a loop keeps the
+    shuffle joins that scale to billion-row frames."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return rows * 48 <= max(conf.autoBroadcastJoinThreshold(), 0)

@@ -519,7 +519,7 @@ def _run_ivm_fold(ev_stream, partial_fn, merge_fn, parts=None):
     parked in the cache registry so the normal between-query sweep
     frees them. Shared by every foreachBatch IVM operator — the
     drain/guard/parking logic exists ONCE."""
-    from pac_spark import cache
+    from pac_spark import cache, session
 
     state = {"view": None, "handles": []}
 
@@ -533,11 +533,7 @@ def _run_ivm_fold(ev_stream, partial_fn, merge_fn, parts=None):
     # every per-batch partial + merge here shuffles matrix-/key-sized
     # frames, and the count applies per micro-batch
     spark = ev_stream.sparkSession
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    if parts is not None:
-        spark.conf.set(parts_key, str(parts))
-    try:
+    with session.scoped_conf(spark, session.SHUFFLE_PARTITIONS, parts):
         q = (
             ev_stream.writeStream.foreachBatch(fold)
             .outputMode("update")
@@ -545,9 +541,6 @@ def _run_ivm_fold(ev_stream, partial_fn, merge_fn, parts=None):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if parts is not None:
-            spark.conf.set(parts_key, prev_parts)
     if state["view"] is None:
         raise RuntimeError("stream delivered no batches")
     with cache._LOCK:

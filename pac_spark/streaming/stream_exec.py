@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pac_spark import catalog
+from pac_spark import catalog, session
 from pac_spark.functions.exact import money_sum
 from pac_spark.streaming.windows import TS_FMT, windowed_agg
 
@@ -76,20 +76,19 @@ def stream_shuffle_parts(
     overhead repeats every micro-batch, not once per query (guide
     §2.2: fewer, larger partitions; the state-store analog of the
     graph loops' measured rule). Derived from the SOURCE's on-disk
-    bytes — max(4, bytes / PAC_STREAM_PART_BYTES) capped at the
-    session default — so it is scale-adaptive, not tuned to this box:
-    a TB-scale source keeps the session's own setting, and the
-    session default itself stays whatever the cluster set. Returns
-    None (no override) when the source cannot be stat'ed — the sizing
-    stat is LOCAL-FILESYSTEM-ONLY by design (ADVICE r11): on remote
-    storage (s3a://, hdfs://) the os.path probe fails and the drain
-    simply runs at the session default, a perf-only fallback; the
-    catalog itself resolves ``{sf_dir}/{table}.parquet`` the same way
+    bytes / PAC_STREAM_PART_BYTES through
+    :func:`pac_spark.session.loop_partitions` — so it is
+    scale-adaptive: a TB-scale source keeps the session's own setting.
+    Returns None (no override) when the source cannot be stat'ed — the
+    sizing stat is LOCAL-FILESYSTEM-ONLY by design: on remote storage
+    (s3a://, hdfs://) the os.path probe fails and the drain simply
+    runs at the session default, a perf-only fallback; the catalog
+    itself resolves ``{sf_dir}/{table}.parquet`` the same way
     (catalog.load), so when the probe DOES succeed it is reading the
-    drain's actual source, not an unrelated file. Partition count
-    cannot change any drained result: every stateful fold here is a
-    per-key monoid (unit-tested both merge orders) and watermark
-    semantics are partition-independent.
+    drain's actual source. Partition count cannot change any drained
+    result: every stateful fold here is a per-key monoid (unit-tested
+    both merge orders) and watermark semantics are
+    partition-independent.
     """
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
@@ -103,14 +102,7 @@ def stream_shuffle_parts(
             nbytes = os.path.getsize(path)
     except OSError:
         return None
-    try:
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        # non-integer session conf (e.g. "auto"): the runtime is sizing
-        # partitions itself — skip the override rather than raise
-        # (ADVICE r11)
-        return None
-    return min(cur, max(4, -(-nbytes // _STREAM_PART_BYTES)))
+    return session.loop_partitions(spark, -(-nbytes // _STREAM_PART_BYTES))
 
 
 def run_to_memory(
@@ -125,11 +117,7 @@ def run_to_memory(
     (from :func:`stream_shuffle_parts`) scopes the shuffle-partition
     count — i.e. the state-store count — to the drain; the session
     setting is restored before returning."""
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    if parts is not None:
-        spark.conf.set(parts_key, str(parts))
-    try:
+    with session.scoped_conf(spark, session.SHUFFLE_PARTITIONS, parts):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -138,9 +126,6 @@ def run_to_memory(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if parts is not None:
-            spark.conf.set(parts_key, prev_parts)
     return spark.table(name)
 
 

@@ -23,6 +23,23 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def gate_decisions(monkeypatch) -> list[bool]:
+    """Every ``session.fits_broadcast`` decision made during the test,
+    in call order — proves which join path a loop actually took."""
+    from pac_spark import session
+
+    decisions: list[bool] = []
+    real = session.fits_broadcast
+
+    def recording(spark, rows):
+        decisions.append(real(spark, rows))
+        return decisions[-1]
+
+    monkeypatch.setattr(session, "fits_broadcast", recording)
+    return decisions
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     """DuckDB connection with the same views the driver registers."""

@@ -768,48 +768,6 @@ def test_pagerank_rejects_empty_graph(spark):
         pagerank(empty)
 
 
-def test_broadcast_threshold_parses_and_warns_on_garbage():
-    """The conf parser handles every documented byte-suffix form; an
-    UNPARSEABLE value falls back to 0 (always-correct shuffle path,
-    ADVICE r9) but emits a one-time RuntimeWarning so a merely
-    malformed conf is diagnosable (ADVICE r10)."""
-    import warnings as W
-
-    from pac_spark.operators import graph
-
-    class FakeConf:
-        def __init__(self, v):
-            self._v = v
-
-        def get(self, key, default=None):
-            return self._v
-
-    class FakeSpark:
-        def __init__(self, v):
-            self.conf = FakeConf(v)
-
-    for raw, want in [
-        ("10485760", 10485760),
-        ("10m", 10 << 20),
-        ("10MB", 10 << 20),
-        ("1g", 1 << 30),
-        ("512k", 512 << 10),
-        ("-1", 0),
-        ("0", 0),
-    ]:
-        assert graph._broadcast_threshold(FakeSpark(raw)) == want, raw
-
-    graph._WARNED_UNPARSEABLE_THRESHOLD = False
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        assert graph._broadcast_threshold(FakeSpark("10 MB garbage")) == 0
-        assert graph._broadcast_threshold(FakeSpark("10 MB garbage")) == 0
-    warned = [c for c in caught if issubclass(c.category, RuntimeWarning)]
-    assert len(warned) == 1, "exactly one warning per process"
-    assert "autoBroadcastJoinThreshold" in str(warned[0].message)
-    graph._WARNED_UNPARSEABLE_THRESHOLD = False
-
-
 def test_lifetime_cents_rounding_half_away_from_zero():
     from pac_spark.streaming.stateful import _cents
 

@@ -24,6 +24,29 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _with_pendant_chain(sf_dir, tmp_path) -> str:
+    """A copy of ``sf_dir``'s lineitem plus a 3-part pendant chain
+    (each pair ordered together twice), so k-core peels at least one
+    round; the fixture's own co-purchase graph is already a 2-core."""
+    import os
+
+    import pandas as pd
+
+    li = pd.read_parquet(
+        os.path.join(sf_dir, "lineitem.parquet"), columns=["l_orderkey", "l_partkey"]
+    )
+    order, part = int(li.l_orderkey.max()) + 1, int(li.l_partkey.max()) + 1
+    chain = [(int(li.l_partkey.iloc[0]), part), (part, part + 1), (part + 1, part + 2)]
+    rows = []
+    for a, b in chain:
+        for _ in range(2):
+            rows += [(order, a), (order, b)]
+            order += 1
+    extra = pd.DataFrame(rows, columns=["l_orderkey", "l_partkey"]).astype(li.dtypes)
+    pd.concat([li, extra]).to_parquet(tmp_path / "lineitem.parquet")
+    return str(tmp_path)
+
+
 def test_fused_pq_codebooks_match_per_subspace_loops(spark, sf_dir):
     """_pq_codebooks (one loop keyed by sub) must reproduce the per-m
     _ivf_centroids loops digit-for-digit — same init salts, same
@@ -69,25 +92,36 @@ def test_fused_pq_codebooks_match_per_subspace_loops(spark, sf_dir):
         assert fused[m] == per_m, f"subspace {m} codebook diverged"
 
 
-def test_graph_loops_invariant_to_broadcast_gate(spark, sf_dir):
+def test_graph_loops_invariant_to_broadcast_gate(
+    spark, sf_dir, tmp_path, gate_decisions
+):
     """lpa/sssp/kcore results must be identical with loop broadcasts
-    disabled (threshold -1 forces the shuffle-join fallback path)."""
+    disabled (threshold -1 forces the shuffle-join fallback path). The
+    recorded gate decisions prove the default run took the broadcast
+    path and the -1 run never did."""
     from pac_spark.operators.graph import (
         kcore_parts,
         lpa_communities,
         sssp_from_hub,
     )
+    from pac_spark.session import scoped_conf
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    for fn in (lpa_communities, sssp_from_hub, kcore_parts):
-        with_bcast = _rows(fn(spark, sf_dir))
+    peel_dir = _with_pendant_chain(sf_dir, tmp_path)
+    for fn, src in (
+        (lpa_communities, sf_dir),
+        (sssp_from_hub, sf_dir),
+        (kcore_parts, peel_dir),
+    ):
+        gate_decisions.clear()
+        with_bcast = _rows(fn(spark, src))
+        assert True in gate_decisions, f"{fn.__name__} never broadcast"
         release_caches(all_generations=True)
-        spark.conf.set(key, "-1")
-        try:
-            without = _rows(fn(spark, sf_dir))
-        finally:
-            spark.conf.set(key, prev)
+        gate_decisions.clear()
+        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", -1):
+            without = _rows(fn(spark, src))
+        assert gate_decisions and not any(gate_decisions), (
+            f"{fn.__name__} broadcast at threshold -1"
+        )
         release_caches(all_generations=True)
         assert with_bcast == without, f"{fn.__name__} gate-variant"
 

@@ -25,22 +25,25 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_connected_components_invariant_to_broadcast_gate(spark, sf_dir):
+def test_connected_components_invariant_to_broadcast_gate(
+    spark, sf_dir, gate_decisions
+):
     """CC-loop results must be identical with loop broadcasts disabled
-    (threshold -1 forces the shuffle-join fallback path) — the r12
+    (threshold -1 forces the shuffle-join fallback path) — the
     byte-gated broadcast of the endpoint-sized label frame into the
-    per-round edge join and the pointer-doubling self-join."""
+    per-round edge join and the pointer-doubling self-join. The
+    recorded gate decisions prove the default run took the broadcast
+    path and the -1 run never did."""
     from pac_spark.operators.graph import trade_graph_components
+    from pac_spark.session import scoped_conf
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
     with_bcast = _rows(trade_graph_components(spark, sf_dir))
+    assert True in gate_decisions, "default threshold never broadcast"
     release_caches(all_generations=True)
-    spark.conf.set(key, "-1")
-    try:
+    gate_decisions.clear()
+    with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", -1):
         without = _rows(trade_graph_components(spark, sf_dir))
-    finally:
-        spark.conf.set(key, prev)
+    assert gate_decisions and not any(gate_decisions), "broadcast at threshold -1"
     release_caches(all_generations=True)
     assert with_bcast == without, "connected_components gate-variant"
 

@@ -3,10 +3,11 @@
 Usage:
     python tools/dump_plans.py <suffix> [query ...]
 
-Writes plans/r11/<query>_<suffix>.txt for each named query (default:
-every BENCH_QUERIES entry). The driver's judge reads these artifacts to
-check plan-shape claims (Exchange count, join strategy, PushedFilters)
-against the code, so the dump is the raw formatted plan, untruncated.
+Writes plans/$PAC_PLANS_ROUND/<query>_<suffix>.txt (default round:
+r12) for each named query (default: every BENCH_QUERIES entry), over
+the tables in $SPARK_GRAFT_SF_DIR. These artifacts back plan-shape
+claims (Exchange count, join strategy, PushedFilters) against the
+code, so the dump is the raw formatted plan, untruncated.
 
 Streaming queries (run_to_memory drains) cannot be explained without
 executing the stream; for those the dump records the drained batch
